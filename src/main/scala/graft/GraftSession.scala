@@ -61,15 +61,10 @@ object GraftSession {
     sys.env.contains("SPARK_HOME") && sys.env.contains("SPARK_SCALA_VERSION")
 
   def build(cpus: Int, appName: String = "graft"): SparkSession = {
-    // shuffle parallelism defaults to the core count; SPARK_GRAFT_SHUFFLE_PARTS
-    // (absolute) or SPARK_GRAFT_PARTS_PER_CORE override it for experiments
-    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.toInt)
-      .orElse(sys.env.get("SPARK_GRAFT_PARTS_PER_CORE").map(_.toInt * cpus))
-      .getOrElse(cpus)
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", parts.toString)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

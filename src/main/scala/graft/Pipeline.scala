@@ -131,11 +131,8 @@ object DedupPipeline {
     // whatever the optimizer guesses, so reps/sigs persist lazily and the
     // small-corpus fixed cost drops two scheduler round trips.
     var eagerCounts = true
-    // env-gated per-stage build timing (driver-side cost forensics)
-    val stageLog = sys.env.get("SPARK_GRAFT_STAGE_LOG").contains("1")
-    def stage(name: String, multiConsumer: Boolean = true)(build: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val out = ck.map(_.stage(name)(build)).getOrElse {
+    def stage(name: String, multiConsumer: Boolean = true)(build: => DataFrame): DataFrame =
+      ck.map(_.stage(name)(build)).getOrElse {
         if (!multiConsumer) build
         else {
           val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -146,10 +143,6 @@ object DedupPipeline {
           df
         }
       }
-      if (stageLog)
-        println(f"STAGE_BUILD $name%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      out
-    }
 
     val mode = Scope.parse(cfg.scope)
     // Comparison-scope plan (round-2 completeness fix — see Scope.scala):
@@ -266,8 +259,8 @@ object DedupPipeline {
         // verification consumes the candidate frame three times (two
         // touched-url scans + the melted probe side); AQE stage reuse only
         // partially deduplicates the copies (measured 1.47× wall / 1.74×
-        // shuffle bytes unpersisted — tools/ReuseCheck), so the narrow
-        // ~50 MB-per-M-pairs frame is worth pinning
+        // shuffle bytes unpersisted — BENCH.md, round-4 melt rework), so
+        // the narrow ~50 MB-per-M-pairs frame is worth pinning
         val cands = Lsh.candidatePairs(spark, sigs, cfg.lshConfig, scopeCol = col("bscope"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         Lsh.verifiedEdges(cands, sigs, cfg.lshConfig, cfg.jaccardTau)

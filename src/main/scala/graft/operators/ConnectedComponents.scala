@@ -21,11 +21,11 @@ import org.apache.spark.storage.StorageLevel
   * LSH clique edges), converging in 2–3 rounds. Determinism comes from the
   * label *values* (natural keys), never from partition order.
   *
-  * Scale notes: the distributed path is the ONE deliberate RDD loop in the
-  * engine (the canonical iterative-graph exception to DataFrame-first —
-  * the reason GraphX exists). A DataFrame loop pays three Catalyst-planned
-  * shuffles plus a localCheckpoint plus a checksum job per round, ~6 s per
-  * round at 2 AND 8 cores on 550k edges (tools/CcProfile) — all per-round
+  * Scale notes: the distributed path is an RDD loop (the canonical
+  * iterative-graph exception to DataFrame-first — the reason GraphX
+  * exists). A DataFrame loop pays three Catalyst-planned shuffles plus a
+  * localCheckpoint plus a checksum job per round, ~6 s per round at 2 AND
+  * 8 cores on 550k edges (profiled before the RDD rewrite) — all per-round
   * driver latencies that a cluster cannot parallelize. The RDD loop
   * hash-partitions the symmetric edge list ONCE; labels stay co-partitioned
   * so the per-round `edges ⋈ labels` is narrow, leaving one message
@@ -71,12 +71,6 @@ object ConnectedComponents {
     // common case at sandbox scale). limit(k+1).count() stops scanning as
     // soon as k+1 edges exist, so the big-graph case pays one truncated
     // scan, not a full count.
-    // env-gated phase timing for scaling forensics (tools/CcProfile)
-    val ccLog = sys.env.get("SPARK_GRAFT_CC_LOG").contains("1")
-    def logT(name: String, t0: Long): Unit =
-      if (ccLog) println(f"CC_PHASE $name%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-
-    val tProbe = System.nanoTime()
     val probeLimit = math.min(maxDriverEdges + 1, Int.MaxValue.toLong).toInt
     // The probe COLLECTS (bounded) rather than counting: when the driver
     // path wins — the common case at sandbox scale — the collected pairs
@@ -90,11 +84,10 @@ object ConnectedComponents {
     if (probed.length <= maxDriverEdges)
       return runOnDriver(spark, nodes,
         probed.map(r => (r.getString(0), r.getString(1))), driverNk)
-    logT("probe", tProbe)
 
     // The iterative core is a co-partitioned RDD loop, not a DataFrame
-    // loop — the one place in this engine where RDDs win. Measured
-    // (tools/CcProfile, 1M docs, 550k edges): each DataFrame round cost
+    // loop — a fixed-plan iteration is where RDDs win. Measured (1M docs,
+    // 550k edges, before the RDD rewrite): each DataFrame round cost
     // ~6 s at 2 AND at 8 cores — three Catalyst-planned shuffles (edges ⋈
     // labels, re-agg by dst, pointer-jump self-join), a localCheckpoint
     // materialization and a checksum job, all dominated by per-round
@@ -117,7 +110,6 @@ object ConnectedComponents {
     }
     val min2: (Lbl, Lbl) => Lbl = (a, b) => if (cmp(a, b) <= 0) a else b
 
-    val tSetup = System.nanoTime()
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val part = new HashPartitioner(nParts)
 
@@ -138,7 +130,6 @@ object ConnectedComponents {
       .mapPartitions(_.map { case (u, (nk, _)) => (u, (nk, u): Lbl) },
         preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    logT("setup", tSetup)
 
     // Pointer jumping (label(u) ← label(label(u).url)) costs two extra
     // shuffles per round, and star/clique-shaped dedup topology converges
@@ -160,7 +151,6 @@ object ConnectedComponents {
     var iter = 0
     var changed = Long.MaxValue
     while (changed > 0 && iter < maxIter) {
-      val tIter = System.nanoTime()
       // one-hop min-label messages; the round's only required shuffle
       val msgs = und.join(labels, part)
         .map { case (_, (dst, lbl)) => (dst, lbl) }
@@ -184,7 +174,6 @@ object ConnectedComponents {
       // fixpoint condition (see loop comment), jumping only accelerates it
       changed = acc.value
       iter += 1
-      logT(s"iter_$iter", tIter)
     }
     if (changed > 0) {
       // fail loudly: non-converged labels would silently elect wrong

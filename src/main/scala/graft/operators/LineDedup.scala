@@ -13,16 +13,18 @@ import org.apache.spark.sql.functions._
   * document frequency (distinct docs containing it) reaches `maxDf`.
   * Remaining lines are reassembled in original order.
   *
-  * Scale shape (all linear, three shuffles):
-  *   1. posexplode lines — rides the document scan;
-  *   2. df per line: groupBy(xxhash64(line)) with a two-phase distinct
-  *      count — partial aggregation map-side; the shuffle carries
-  *      (line_hash, url_hash) pairs, never line text;
-  *   3. hash-join the per-line df back (line side carries text once) and
-  *      groupBy(url) to reassemble — partial aggregation again.
+  * Scale shape (linear; document text never crosses an exchange):
+  *   1. explode lines — rides the document scan;
+  *   2. df per line: groupBy(xxhash64(line), length(line)) with a
+  *      two-phase distinct count — partial aggregation map-side; the
+  *      shuffle carries (line key, url_hash) pairs, never line text;
+  *   3. the frequent keys fold into a strip set that is broadcast back
+  *      (one row, global) or equi-joined back by scope (per-scope), and
+  *      each document filters its own line array in place, keeping the
+  *      original order without a reassembly groupBy.
   * The strip key is the widened (xxhash64(line), length(line)) pair: a
   * bare 64-bit hash could strip an innocent line at ~n²/2^65 odds at
-  * 10^12-doc scale, and the reassembly join verifies nothing textual;
+  * 10^12-doc scale, and the in-place filter verifies nothing textual;
   * requiring the length to also collide removes the dominant failure
   * mode at zero extra shuffle width. The DuckDB oracle groups by line
   * TEXT — identical semantics whenever the widened key is collision-free.
@@ -33,7 +35,15 @@ import org.apache.spark.sql.functions._
   */
 object LineDedup {
 
-  /** @param docs (url, text) — text with `sep` unit separators
+  // columns the strip-set joins add beside the input's own
+  private val Reserved = Set("strips", "__fs")
+
+  private def requireNoReserved(docs: DataFrame): Unit =
+    docs.columns.foreach(c => require(!Reserved(c.toLowerCase),
+      s"input column collides with a reserved name: $c"))
+
+  /** @param docs (url, text) — text with `sep` unit separators; must not
+    *        carry a `strips` or `__fs` column
     * @param maxDf units appearing in ≥ maxDf distinct docs are stripped
     * @param sep the dedup granularity: "\n" = lines (CCNet), "\n\n" =
     *        paragraphs (the RefinedWeb / Falcon variant of the same
@@ -41,6 +51,7 @@ object LineDedup {
     *        same way)
     * @return (url, kept_text, n_lines, n_stripped) for every input doc */
   def stripFrequentLines(docs: DataFrame, maxDf: Long, sep: String = "\n"): DataFrame = {
+    requireNoReserved(docs)
     val q = java.util.regex.Pattern.quote(sep)
     // document frequency per line; the WIDENED (hash, length) key keeps
     // the shuffle narrow and the strip set compact (line text never
@@ -63,12 +74,13 @@ object LineDedup {
     // derivable from the broadcast set; the in-place array filter keeps
     // original order for free.
     //
-    // Scale bound: the broadcast caps the GLOBAL strip set at ~10^8
-    // (hash, length) entries (12 B each against Spark's 8 GB broadcast
-    // limit) — ample for any sane maxDf, but a corpus-scale run wanting
-    // an unbounded strip population should use the per-scope variant
-    // below, whose strip sets re-attach through a planner-sized equi-join
-    // (and which is the granularity CCNet actually deploys).
+    // Scale bound: the GLOBAL strip set is one collect_list row, and a
+    // single UnsafeRow is capped at 2 GB — ~6×10^7 (hash, length) entries
+    // at ~32 B per struct element, and the driver must hold that row for
+    // the broadcast — ample for any sane maxDf, but a corpus-scale
+    // run wanting an unbounded strip population should use the per-scope
+    // variant below, whose strip sets re-attach through a planner-sized
+    // equi-join (and which is the granularity CCNet actually deploys).
     val strips = freq.agg(collect_list(struct(col("lh"), col("ll"))).as("strips"))
     docs
       .where(col("text").isNotNull) // explode of a null array emitted no rows
@@ -143,15 +155,16 @@ object LineDedup {
     * df-aggregation and strip-join keys — per-scope keys also break up
     * the one hot key a corpus-global banner would otherwise hash to.
     *
-    * @param docs (scope, url, text); output (url, kept_text, n_lines,
-    *        n_stripped), one row per input doc. */
+    * @param docs (scope, url, text), no `strips` or `__fs` column; output
+    *        (url, kept_text, n_lines, n_stripped), one row per input doc. */
   def stripFrequentLinesPerScope(
       docs: DataFrame,
       scope: String,
       maxDf: Long,
       sep: String = "\n"): DataFrame = {
-    require(scope != "url" && scope != "text" && scope != "__fs",
+    require(scope != "url" && scope != "text" && !Reserved(scope),
       s"scope column collides with a reserved name: $scope")
+    requireNoReserved(docs)
     val q = java.util.regex.Pattern.quote(sep)
     val freq = docs
       .select(col(scope), col("url"),

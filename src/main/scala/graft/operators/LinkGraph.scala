@@ -27,17 +27,14 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Scale shape: the graph lives at HOST grain (~10⁸ rows for a full
-  * crawl, not 10¹² pages), so each round is one shuffle join
-  * (edges ⋈ ranks on src — edges can be pre-bucketed by src so only the
-  * slim ranks side exchanges) plus one map-side-combined groupBy(dst).
-  * Mega-host in-degree skew collapses in the partial aggregation —
-  * contributions are longs, never strings. The rank vector is
-  * `localCheckpoint`ed every round: power iteration is the textbook case
-  * where lineage must be truncated (10 rounds of join+agg otherwise
-  * nests the full plan 10 deep), the same justification as the
-  * [[ConnectedComponents]] loop; at cluster scale the per-round vector
-  * would land in the [[graft.plans.CheckpointIO]] manifest instead, and
-  * the loop resumes mid-run like every other stage.
+  * crawl, not 10¹² pages). The rounds run as a co-partitioned RDD loop
+  * (the same iterative-graph exception as the [[ConnectedComponents]]
+  * loop): edges are hash-partitioned by src once, so each round is one
+  * narrow edges ⋈ ranks join plus one map-side-combined reduceByKey(dst).
+  * Mega-host in-degree skew collapses in the map-side combine —
+  * contributions are longs, never strings. At cluster scale the
+  * per-round vector would land in the [[graft.plans.CheckpointIO]]
+  * manifest, and the loop would resume mid-run like every other stage.
   *
   * Reference anchor: the reference ranks duplicate-cluster members by a
   * fixed source-priority list to elect the keep
@@ -73,8 +70,7 @@ object LinkGraph {
       nodes: DataFrame,
       edges: DataFrame,
       rounds: Int = 10,
-      dampingPct: Int = 85,
-      checkpointRounds: Boolean = true): DataFrame = {
+      dampingPct: Int = 85): DataFrame = {
     require(rounds >= 0 && rounds <= 64, s"rounds out of range: $rounds")
     require(dampingPct >= 0 && dampingPct <= 100, s"dampingPct: $dampingPct")
 
@@ -106,43 +102,8 @@ object LinkGraph {
 
     val spark = nodes.sparkSession
 
-    if (!checkpointRounds) {
-      // Lazy DataFrame composition — the plan-audit path (PLAN 25) and
-      // few-round small graphs. ONE exchange per round for both
-      // aggregates: edge contributions keyed by dst UNION the dangling
-      // mass keyed by a null host (hosts are non-null by contract, so
-      // null cannot collide; the null group collapses map-side like any
-      // other partial sum).
-      var ranks = nodeFlag.select(col("host"), col("is_dang"),
-        lit(Scale / n).as("rank_nano"))
-      for (_ <- 1 to rounds) {
-        val agg = ed
-          .join(ranks, ed("src") === ranks("host"))
-          .select(col("dst").as("host"), expr("rank_nano div deg").as("c"))
-          .unionByName(ranks.where(col("is_dang"))
-            .select(lit(null).cast("string").as("host"),
-              col("rank_nano").as("c")))
-          .groupBy(col("host"))
-          .agg(sum(col("c")).as("inflow"))
-        val dangling = agg.where(col("host").isNull)
-          .agg(coalesce(sum(col("inflow")), lit(0L)).as("dang"))
-        ranks = ranks.select(col("host"), col("is_dang"))
-          .join(agg.where(col("host").isNotNull), Seq("host"), "left")
-          .crossJoin(broadcast(dangling))
-          .select(col("host"), col("is_dang"),
-            (lit(base) + expr(
-              s"($dampingPct * (coalesce(inflow, 0L) + dang div ${n}L)) div 100"))
-              .as("rank_nano"))
-      }
-      deg.unpersist(blocking = false)
-      ed.unpersist(blocking = false)
-      e.unpersist(blocking = false)
-      nodeTbl.unpersist(blocking = false)
-      return ranks.select(col("host"), col("rank_nano"))
-    }
-
-    // Production loop: co-partitioned RDD power iteration — the shape
-    // the r6 profile demanded. The Catalyst formulation paid a per-round
+    // Co-partitioned RDD power iteration — the shape the r6 profile
+    // demanded. The Catalyst formulation paid a per-round
     // planning pass plus one AQE materialization barrier PER EXCHANGE
     // (profiled: 114 jobs / 437 stages for one 10-round run, ~40% of
     // wall between jobs), and its sort-merge joins re-sorted the edge

@@ -111,8 +111,8 @@ object SubstringDup {
     // the candidate frame feeds BOTH the touched-url semi-join and the
     // pair melt; pin the narrow frame so the fingerprint bucketing runs
     // once (the same three-consumer shape the pipeline's substr stage
-    // pins — tools/ReuseCheck measured AQE reuse alone recovering only
-    // part of the duplicate work)
+    // pins — AQE reuse alone recovers only part of the duplicate work:
+    // 1.47× wall / 1.74× shuffle bytes unpersisted, OPTIMIZATION_r06.md §6)
     val candidates = candidatePairs(spark, docs, cfg, scopeCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val texts = touchedTexts(candidates, docs.select(col("url"), col("text")))

@@ -112,6 +112,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(run("crc32") == base)
   }
 
+  test("garbage rows (null html, null url, empty html) neither fail the run nor get clustered") {
+    val pages = spark.createDataFrame(SyntheticCorpus.local(200).pages)
+    val ts = new java.sql.Timestamp(0L)
+    val garbage = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row("https://x/a.html", ts, null, null, "en"),
+      org.apache.spark.sql.Row(null, ts, "<p>hi</p>".getBytes, null, "en"),
+      org.apache.spark.sql.Row("https://x/b.html", ts, Array.empty[Byte], null, "en"))),
+      pages.schema)
+    val states = DedupPipeline.run(spark, pages.unionByName(garbage), DedupConfig(), fromHtml = true)
+      .decisions.select("url", "state").collect()
+      .map(r => Option(r.getString(0)) -> r.getString(1))
+    assert(states.filter(_._1.contains("https://x/b.html")).map(_._2).toSeq == Seq("ignored"))
+    val garbageStates = states.filter(s => s._1.isEmpty || s._1.contains("https://x/a.html"))
+    assert(!garbageStates.exists(s => s._2 == "keep" || s._2 == "delete"), garbageStates.toSeq)
+  }
+
   test("deduped corpus drops exactly the delete rows") {
     val pages = spark.createDataFrame(corpus.pages)
     val deduped = DedupPipeline.dedupedCorpus(pages, result.decisions)

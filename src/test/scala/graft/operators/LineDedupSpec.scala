@@ -125,4 +125,19 @@ class LineDedupSpec extends AnyFunSuite {
     assert(scoped == 0L, "host-rare line must survive the scoped strip")
     assert(global == 12L, "the same line is corpus-frequent for the global strip")
   }
+
+  test("reserved strip-set column names are rejected up front") {
+    import spark.implicits._
+    val docs = Seq(("h", "u1", "a\nb", "x")).toDF("host", "url", "text", "strips")
+    Seq(
+      () => LineDedup.stripFrequentLinesPerScope(docs.drop("host"), "strips", maxDf = 2),
+      () => LineDedup.stripFrequentLinesPerScope(docs, "host", maxDf = 2),
+      () => LineDedup.stripFrequentLinesPerScope(
+        docs.drop("strips").withColumn("__fs", col("host")), "host", maxDf = 2),
+      () => LineDedup.stripFrequentLines(docs.drop("host"), maxDf = 2)
+    ).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("reserved name"), e.getMessage)
+    }
+  }
 }
