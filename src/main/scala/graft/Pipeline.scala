@@ -68,9 +68,13 @@ final case class DedupConfig(
   def substrConfig: SubstringDup.Config = SubstringDup.Config(
     minSubstr = minSubstr, anchorK = anchorK, bucketCap = bucketCap, seed = seed)
 
-  /** Deterministic config hash (stamped into checkpoint manifests). */
+  /** Deterministic config hash (stamped into checkpoint manifests), over
+    * the persisted record only: `runDir` (where the run lives) and
+    * `ccMaxDriverEdges` (which CC path computes the same labels) do not
+    * change any output, so a moved run dir or a changed CC threshold still
+    * resumes from its checkpoints. */
   def hash: String = {
-    val repr = this.toString
+    val repr = ConfigIO.toJson(this)
     java.lang.Long.toHexString(graft.functions.Hash64.hashBytes(
       repr.getBytes(java.nio.charset.StandardCharsets.UTF_8), 0x60F1L))
   }

@@ -621,7 +621,7 @@ object SparkEntry {
     // ---- Manku SimHash-table retrieval (Hamming-defined near-dup) ----
     // Rows-only (signature internals): corpus simhashes ∪ planted ≤3-bit
     // flips; retrieval is PURELY by permuted-table key equality (Manku
-    // WWW'07) — complete for Hamming ≤ tableBlocks - tableKeep = 3 by
+    // WWW'07) — complete for Hamming ≤ nBlocks - keep = 6 - 3 by
     // pigeonhole (SimhashTablesSpec proves completeness on planted flips).
     "q_simhash_tables" -> ((s, dir) => {
       val sh0 = docs(s, dir).select(

@@ -180,21 +180,6 @@ object MinHashImpl {
 
   @inline def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  /** SimHash block keys: 4 × 16-bit blocks tagged with their index. By the
-    * pigeonhole principle, any pair at Hamming distance ≤ 3 shares at least
-    * one identical block — so bucketing on these keys is a complete
-    * candidate generator for hamMax ≤ 3. */
-  def simhashBlocks(h: Long): Array[Long] = {
-    val out = new Array[Long](4)
-    var i = 0
-    while (i < 4) {
-      val block = (h >>> (i * 16)) & 0xFFFFL
-      out(i) = Hash64.combine(i.toLong + 0x51L, block)
-      i += 1
-    }
-    out
-  }
-
   /** Manku/Jain/Sarma-style permuted-table keys (WWW'07 §3): the 64-bit
     * fingerprint is split into `nBlocks` near-equal blocks; each of the
     * C(nBlocks, keep) block combinations becomes one table whose key is the
@@ -205,9 +190,8 @@ object MinHashImpl {
     * one table key — a COMPLETE candidate generator for
     * hamMax ≤ nBlocks - keep. With the defaults (6, 3): 20 keys per doc,
     * each drawn from a ~2^32 key space, so buckets stay tiny at 10^9+ docs
-    * — unlike the 4×16-bit block scheme whose 2^16 key space goes quadratic
-    * past ~10^5 docs (round-1 finding; kept only as the documented
-    * small-corpus variant). Keys are Hash64-mixed: equal block values map
+    * — unlike a 4×16-bit block scheme, whose 2^16 key space goes quadratic
+    * past ~10^5 docs (round-1 finding). Keys are Hash64-mixed: equal block values map
     * to equal keys (the guarantee needs only that direction), and a random
     * 2^-64 collision merely adds a candidate that verification discards. */
   def simhashTableKeys(h: Long, nBlocks: Int, keep: Int): Array[Long] = {

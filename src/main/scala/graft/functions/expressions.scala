@@ -45,8 +45,6 @@ object codegenHelpers {
       MinHashImpl.bandBuckets(sig.toLongArray(), bands, rowsPerBand, seed))
   def sigDigest(sig: org.apache.spark.sql.catalyst.util.ArrayData): Long =
     MinHashImpl.sigDigest(sig.toLongArray())
-  def simhashBlocks(h: Long): UnsafeArrayData =
-    UnsafeArrayData.fromPrimitiveArray(MinHashImpl.simhashBlocks(h))
   def simhashTableKeys(h: Long, nBlocks: Int, keep: Int): UnsafeArrayData =
     UnsafeArrayData.fromPrimitiveArray(MinHashImpl.simhashTableKeys(h, nBlocks, keep))
   def estJaccard(a: org.apache.spark.sql.catalyst.util.ArrayData,
@@ -175,16 +173,6 @@ case class SigDigest(child: Expression) extends GraftUnary {
   override protected def staticCall(c: String): String = s"$H.sigDigest($c)"
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "sig_digest"
-}
-
-/** simhash → 4 tagged 16-bit block keys (complete candidates for Hamming≤3). */
-case class SimHashBlocks(child: Expression) extends GraftUnary {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(v: Any): Any =
-    codegenHelpers.simhashBlocks(v.asInstanceOf[Long])
-  override protected def staticCall(c: String): String = s"$H.simhashBlocks($c)"
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "simhash_blocks"
 }
 
 /** simhash → C(nBlocks, keep) permuted-table keys (Manku WWW'07) — complete
@@ -362,7 +350,6 @@ object gf {
   def band_buckets(c: Column, bands: Int, rowsPerBand: Int, seed: Long): Column =
     col(BandBuckets(expr(c), bands, rowsPerBand, seed))
   def sig_digest(c: Column): Column = col(SigDigest(expr(c)))
-  def simhash_blocks(c: Column): Column = col(SimHashBlocks(expr(c)))
   def simhash_table_keys(c: Column, nBlocks: Int, keep: Int): Column =
     col(SimHashTableKeys(expr(c), nBlocks, keep))
   def winnow_fingerprints(c: Column, k: Int, w: Int): Column =

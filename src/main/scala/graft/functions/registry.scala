@@ -31,7 +31,6 @@ object GraftFunctions {
     "simhash64" -> (es => SimHash64(es(0), intLit(es(1)), longLit(es(2)))),
     "band_buckets" -> (es => BandBuckets(es(0), intLit(es(1)), intLit(es(2)), longLit(es(3)))),
     "sig_digest" -> (es => SigDigest(es.head)),
-    "simhash_blocks" -> (es => SimHashBlocks(es.head)),
     "simhash_table_keys" -> (es => SimHashTableKeys(es(0), intLit(es(1)), intLit(es(2)))),
     "winnow_fingerprints" -> (es => WinnowFingerprints(es(0), intLit(es(1)), intLit(es(2)))),
     "est_jaccard" -> (es => EstJaccard(es(0), es(1))),

@@ -199,7 +199,8 @@ object ConnectedComponents {
   /** Driver-side union-find for small edge lists. Semantically identical to
     * the distributed path: representative = the member with the minimum nk
     * (the nodes' sort-key column — natural key, possibly source-priority
-    * prefixed — NOT the raw url, so both paths elect identically). */
+    * prefixed — NOT the raw url), url breaking nk ties, so both paths elect
+    * identically. */
   private def runOnDriver(
       spark: SparkSession,
       nodes: DataFrame,
@@ -241,15 +242,20 @@ object ConnectedComponents {
           .map(r => r.getString(0) -> r.getAs[Array[Byte]]("nk"))
           .toMap
     }
-    // representative per component = nk-minimum member
+    // representative per component = (nk, url)-minimum member: the url
+    // breaks nk ties (natural keys are case-insensitive) exactly as the
+    // distributed path's `cmp` does
     val best = new java.util.HashMap[String, String]()
     val it = members.iterator()
     while (it.hasNext) {
       val m = it.next()
       val r = find(m)
       val cur = best.get(r)
-      if (cur == null ||
-        NaturalKey.compareKeys(nkByUrl(m), nkByUrl(cur)) < 0) best.put(r, m)
+      if (cur == null) best.put(r, m)
+      else {
+        val c = NaturalKey.compareKeys(nkByUrl(m), nkByUrl(cur))
+        if (c < 0 || (c == 0 && m.compareTo(cur) < 0)) best.put(r, m)
+      }
     }
     import spark.implicits._
     val labels = {

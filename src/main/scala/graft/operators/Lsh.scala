@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.gf
 
-/** Near-duplicate candidate generation: MinHash LSH banding (+ optional
-  * SimHash blocks / Manku tables), entirely in Catalyst.
+/** Near-duplicate candidate generation: MinHash LSH banding, entirely in
+  * Catalyst.
   *
   * Pipeline: signature columns → one partially-aggregated (sigd) groupBy
   * electing a center per distinct signature (non-centers star to it —
@@ -14,10 +14,11 @@ import graft.functions.gf
   * quadratic; the exact stage already stars byte-identical docs, this
   * covers identical-signature-but-different-bytes) → posexplode band
   * buckets of the CENTERS only (identical signatures share identical
-  * buckets, so non-centers can't contribute new pairs) → one bounded-top-k
-  * aggregate per bucket keeping members by (nk-prefix, id) up to
-  * `bucketCap` (counting what was dropped — no silent truncation) and a
-  * higher-order transform expands the pairs.
+  * buckets, so non-centers can't contribute new pairs) → [[cappedPairs]]:
+  * one bounded-top-k aggregate per bucket keeping members by (nk-prefix,
+  * id) up to `bucketCap` (counting what was dropped — no silent
+  * truncation) and a higher-order transform expanding the pairs. The
+  * substring and embedding-cosine stages share that bucket → pairs step.
   *
   * This is the scaled analog of the reference's per-device scheduling
   * discipline — bounded work per hot resource
@@ -39,26 +40,8 @@ object Lsh {
         * signature join. Recall-safe at the default: J ≥ 0.8 pairs share
         * ≥ 2 of 32 bands with P ≈ 1 - 1e-6. */
       minSharedBands: Int = 2,
-      hamMax: Int = 3,
-      /** SimHash 16-bit-block candidate generation (complete for Hamming≤3
-        * by pigeonhole) is OFF by default: the block key space is only
-        * 2^16, so beyond ~10^5 docs every block bucket goes quadratic
-        * (observed: 16M+ false candidates at 757k docs). MinHash banding
-        * alone misses a J≥0.8 pair with P≈(1-0.8⁴)³²≈5e-8. The scale path
-        * for Hamming-only retrieval is `useSimhashTables`. */
-      useSimhashBuckets: Boolean = false,
-      /** Manku WWW'07 permuted-table SimHash retrieval: C(tableBlocks,
-        * tableKeep) keys per doc, each over a ~2^(keep·64/nBlocks) key
-        * space — complete for Hamming ≤ tableBlocks - tableKeep with tiny
-        * buckets at web scale. OFF by default (MinHash banding is the
-        * primary near-dup signal; enable for Hamming-defined similarity). */
-      useSimhashTables: Boolean = false,
-      tableBlocks: Int = 6,
-      tableKeep: Int = 3) {
+      hamMax: Int = 3) {
     require(bands * rowsPerBand == numHashes, "bands*rowsPerBand must equal numHashes")
-    require(
-      !useSimhashTables || tableBlocks - tableKeep >= hamMax,
-      s"simhash tables cover Hamming ≤ ${tableBlocks - tableKeep} < hamMax=$hamMax")
   }
 
   /** Adds sig / simhash / sigd columns to a docs frame with a text column.
@@ -77,8 +60,8 @@ object Lsh {
       .drop("__sp")
   }
 
-  /** Candidate pairs from MinHash band buckets (∪ optional SimHash blocks /
-    * Manku tables). Input: url, nk, sig, sigd, simhash. Output: src, dst
+  /** Candidate pairs from MinHash band buckets plus same-signature stars.
+    * Input: url, nk, sig, sigd, simhash. Output: src, dst
     * (src < dst by natural order; one row per pair), same_sig, ham (SimHash
     * Hamming distance), nshared (for distinct-sig pairs: the number of
     * buckets the pair co-occurred in; 1 for same-sig star pairs, which the
@@ -87,9 +70,8 @@ object Lsh {
     *
     * Hot-path design (round-2 rework): every bucket row is FOUR LONGS —
     * doc id (xxhash64 of url), an 8-byte natural-key prefix for ordering,
-    * the SimHash, and the bucket key (plus the signature digest when a
-    * SimHash bucket path needs per-bucket dedup). No strings or byte
-    * arrays pass through the big explode-shuffle or the per-bucket sort:
+    * the SimHash, and the bucket key. No strings or byte arrays pass
+    * through the big explode-shuffle or the per-bucket aggregate:
     * at 1M docs the old string-carrying rows made task CPU inflate 2.7×
     * from 8→32 threads (allocation-rate bound, not compute bound). Ids
     * resolve back to urls with two cheap joins on the (small) pair output.
@@ -107,8 +89,6 @@ object Lsh {
       docs: DataFrame,
       cfg: Config,
       scopeCol: org.apache.spark.sql.Column = lit("")): DataFrame = {
-    import spark.implicits._
-
     val ids = docs.select(
       xxhash64(col("url"), lit(0x1D5EEDL)).as("id"),
       col("url"), col("nk"), col("sig"), col("sigd"), col("simhash"),
@@ -116,18 +96,9 @@ object Lsh {
     val base = ids.select(
       col("id"), gf.nk_prefix64(col("nk")).as("nkp"), col("sigd"),
       col("simhash"), col("bscope_"), col("sig"))
-    // Per-bucket signature dedup is needed only when the SimHash bucket
-    // paths are on: the MinHash band path explodes one row per DISTINCT
-    // signature by construction (centers below), so the default config
-    // drops sigd from bucket rows (8 B/row less through the widest
-    // exchange+sort) and skips the lag-based dedup entirely.
-    val dedupNeeded = cfg.useSimhashBuckets || cfg.useSimhashTables
-    def compact(df: DataFrame, keyCol: org.apache.spark.sql.Column) = df.select(
-      Seq(keyCol.as("bkey"), col("id"), col("nkp")) ++
-        (if (dedupNeeded) Seq(col("sigd")) else Nil) :+ col("simhash"): _*)
 
     // Distinct-signature CENTER election is ONE partially-aggregable
-    // groupBy per branch, not a window (the round-4 rework): identical
+    // groupBy, not a window (the round-4 rework): identical
     // signatures imply identical band buckets, so only centers enter the
     // band explode — a non-center member could never contribute a pair the
     // center doesn't. min(struct(nkp, id, …)) elects the (nkp, id)-first
@@ -142,7 +113,6 @@ object Lsh {
     // full sig table against the elected ids, which at 2M docs exchanged
     // 1.6 GB of signatures (and burned ~30% of the stage's task time)
     // just to recover `sig` for the band explode.
-    import org.apache.spark.sql.expressions.Window
     val narrow = base.drop("sig")
     val elected = base
       .select(
@@ -154,29 +124,14 @@ object Lsh {
         col("sigd"), col("bscope_"), col("c.nkp").as("nkp"),
         col("c.id").as("id"), col("c.simhash").as("simhash"), col("c.bks").as("bks"))
 
-    val minhashBuckets = compact(
-      elected.select(
-        col("id"), col("nkp"), col("sigd"), col("simhash"), col("bscope_"),
-        posexplode(col("bks")).as(Seq("band", "bucket"))),
-      // tag the band into the bucket key so cross-band collisions split
-      xxhash64(col("band"), col("bucket"), col("bscope_")))
-
-    val withBlocks =
-      if (!cfg.useSimhashBuckets) minhashBuckets
-      else minhashBuckets.unionByName(compact(
-        base.select(
-          col("id"), col("nkp"), col("sigd"), col("simhash"), col("bscope_"),
-          explode(gf.simhash_blocks(col("simhash"))).as("bucket")),
-        xxhash64(lit(0x51AB17L), col("bucket"), col("bscope_"))))
-
-    val all =
-      if (!cfg.useSimhashTables) withBlocks
-      else withBlocks.unionByName(compact(
-        base.select(
-          col("id"), col("nkp"), col("sigd"), col("simhash"), col("bscope_"),
-          explode(gf.simhash_table_keys(col("simhash"), cfg.tableBlocks, cfg.tableKeep))
-            .as("tkey")),
-        xxhash64(lit(0x7AB1E5L), col("tkey"), col("bscope_"))))
+    val buckets = elected
+      .select(
+        col("id"), col("nkp"), col("simhash"), col("bscope_"),
+        posexplode(col("bks")).as(Seq("band", "bucket")))
+      .select(
+        // tag the band into the bucket key so cross-band collisions split
+        xxhash64(col("band"), col("bucket"), col("bscope_")).as("bkey"),
+        col("nkp"), col("id"), col("simhash").as("sim"))
 
     // Same-signature star edges are GLOBAL, not per-bucket: identical
     // signatures imply identical band buckets, so grouping by sigd once
@@ -201,61 +156,13 @@ object Lsh {
         gf.hamming_dist(col("center_sim"), col("simhash")).as("ham"),
         lit(0L).as("dropped"))
 
-    // Distinct-signature bucket pairs. Default path: ONE bounded-top-k
-    // aggregate (`gf.bounded_topk`, a TypedImperativeAggregate) per bucket
-    // — the planner gives it a map-side PARTIAL pass, so every input
-    // partition ships at most `bucketCap` members per bucket through the
-    // exchange. A viral-boilerplate bucket with 10^6 distinct-signature
-    // members sends cap×partitions rows instead of 10^6, and the full
-    // exploded-table sort the round-2 window rank needed is gone. Output is
-    // bit-identical to the (nkp, id)-ordered window formulation tested in
-    // BoundedTopKSpec; note the cap-retention ORDER changed from the
-    // round-2 lag-window path ((sigd, nkp, id) there), so over-cap buckets
-    // keep a different — equally valid — member subset than runs recorded
-    // before this release. Rows beyond the cap drop with a count — never
-    // silently. A higher-order
-    // transform expands the ≤ cap members into pairs — no second shuffle,
-    // no self-join. When the SimHash paths are on, a lag window
-    // additionally keeps one member per signature per bucket first (the
-    // band path needs no dedup — it explodes only distinct-signature
-    // centers).
-    val cap = cfg.bucketCap
-    val grouped = if (!dedupNeeded) {
-      all
-        .groupBy(col("bkey"))
-        .agg(gf.bounded_topk(col("nkp"), col("id"), col("simhash"), cap).as("r"))
-        .select(
-          col("bkey"), col("r.ms").as("ms"),
-          greatest(col("r.total") - cap, lit(0L)).as("dropped"))
-        .where(size(col("ms")) >= 2)
-    } else {
-      val wBu = Window.partitionBy(col("bkey"))
-      val wB = Window.partitionBy(col("bkey")).orderBy(col("sigd"), col("nkp"), col("id"))
-      val keepFlag = coalesce(col("sigd") =!= lag(col("sigd"), 1).over(wB), lit(true))
-      all
-        .withColumn("keep", keepFlag)
-        .withColumn("krank", sum(when(col("keep"), 1).otherwise(0)).over(wB))
-        .withColumn("kcnt", sum(when(col("keep"), 1).otherwise(0)).over(wBu))
-        .where(col("keep") && col("krank") <= cap)
-        .groupBy(col("bkey"))
-        .agg(
-          sort_array(collect_list(struct(col("krank"), col("id"), col("simhash")))).as("ms"),
-          max(greatest(col("kcnt") - cap, lit(0))).cast("long").as("dropped"))
-        .where(size(col("ms")) >= 2)
-    }
-    val bucketPairs = grouped
+    // Distinct-signature bucket pairs: the band path explodes one row per
+    // DISTINCT signature (centers above), so buckets need no per-signature
+    // dedup before the cap.
+    val bucketPairs = cappedPairs(buckets, cfg.bucketCap)
       .select(
-        explode(flatten(transform(col("ms"), (x, i) =>
-          transform(
-            slice(col("ms"), i + lit(2), size(col("ms"))),
-            y => struct(
-              x.getField("id").as("src_id"),
-              y.getField("id").as("dst_id"),
-              gf.hamming_dist(x.getField("simhash"), y.getField("simhash")).as("ham")))))).as("p"),
-        col("dropped"))
-      .select(
-        col("p.src_id"), col("p.dst_id"),
-        lit(false).as("same_sig"), col("p.ham"), col("dropped"))
+        col("src_id"), col("dst_id"),
+        lit(false).as("same_sig"), col("ham"), col("dropped"))
 
     // cross-bucket dedup + the free prefilter signals in one aggregation
     val pairs = bucketPairs.unionByName(sigStars)
@@ -275,6 +182,41 @@ object Lsh {
         col("nshared"), col("dropped"))
   }
 
+  /** Bounded-bucket pair expansion — the one bucket → capped members →
+    * pairs step of every bucketed candidate generator (this stage,
+    * `SubstringDup.candidatePairs`, `Similarity.cosDupPairs`). Input: bkey,
+    * nkp, id, sim (longs; one row per member per bucket). Output: src_id,
+    * dst_id, ham (Hamming distance of the two `sim` values), dropped
+    * (members beyond `cap` in that bucket) — one row per pair per bucket,
+    * src before dst in (nkp, id) order.
+    *
+    * ONE bounded-top-k aggregate (`gf.bounded_topk`, a
+    * TypedImperativeAggregate) per bucket: the planner gives it a map-side
+    * PARTIAL pass, so every input partition ships at most `cap` members per
+    * bucket through the exchange. A viral-boilerplate bucket with 10^6
+    * members sends cap×partitions rows instead of 10^6, and no full-table
+    * window sort is needed. Output is bit-identical to the (nkp, id)-ordered
+    * window formulation tested in BoundedTopKSpec. Rows beyond the cap drop
+    * with a count — never silently. A higher-order transform expands the
+    * ≤ cap kept members into pairs — no second shuffle, no self-join. */
+  def cappedPairs(buckets: DataFrame, cap: Int): DataFrame =
+    buckets
+      .groupBy(col("bkey"))
+      .agg(gf.bounded_topk(col("nkp"), col("id"), col("sim"), cap).as("r"))
+      .select(
+        col("r.ms").as("ms"),
+        greatest(col("r.total") - cap, lit(0L)).as("dropped"))
+      .where(size(col("ms")) >= 2)
+      .select(
+        explode(flatten(transform(col("ms"), (x, i) =>
+          transform(
+            slice(col("ms"), i + lit(2), size(col("ms"))),
+            y => struct(
+              x.getField("id").as("src_id"),
+              y.getField("id").as("dst_id"),
+              gf.hamming_dist(x.getField("simhash"), y.getField("simhash")).as("ham")))))).as("p"),
+        col("dropped"))
+      .select(col("p.src_id"), col("p.dst_id"), col("p.ham"), col("dropped"))
 
   /** Verified near-dup edges: candidates are prefiltered on the signals the
     * buckets already produced for free (identical signature, SimHash

@@ -272,28 +272,13 @@ object Similarity {
         explode(array((0 until tables).map(t =>
           gf.vec_simhash(col("embedding"), bits, seed + t * 0x9E3779B9L)
             .bitwiseXOR(lit(t.toLong << 56))): _*)).as("b"))
-      .select(xxhash64(col("b")).as("bkey"), col("vec_id"))
-    // bounded top-k aggregate (see Lsh.candidatePairs): the map-side
-    // partial pass ships ≤ cap members per bucket per input partition and
-    // there is no full-table window sort; order within a bucket is plain
-    // vec_id (passed as both the primary and tiebreak key)
-    val grouped = buckets
-      .groupBy(col("bkey"))
-      .agg(gf.bounded_topk(col("vec_id"), col("vec_id"), lit(0L), bucketCap).as("r"))
+      // order within a bucket is plain vec_id (both the primary and the
+      // tiebreak key of the shared bounded-bucket step)
       .select(
-        col("bkey"), col("r.ms").as("ms"),
-        greatest(col("r.total") - bucketCap, lit(0L)).as("dropped"))
-      .where(size(col("ms")) >= 2)
-    val pairs = grouped
-      .select(
-        explode(flatten(transform(col("ms"), (x, i) =>
-          transform(
-            slice(col("ms"), i + lit(2), size(col("ms"))),
-            y => struct(
-              x.getField("id").as("a_id"),
-              y.getField("id").as("b_id")))))).as("p"),
-        col("dropped"))
-      .groupBy(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"))
+        xxhash64(col("b")).as("bkey"), col("vec_id").as("nkp"),
+        col("vec_id").as("id"), lit(0L).as("sim"))
+    val pairs = Lsh.cappedPairs(buckets, bucketCap)
+      .groupBy(col("src_id").as("a_id"), col("dst_id").as("b_id"))
       .agg(count(lit(1)).as("nshared"), max(col("dropped")).as("dropped"))
     val touched = pairs.select(col("a_id").as("vec_id"))
       .unionByName(pairs.select(col("b_id").as("vec_id")))

@@ -35,13 +35,12 @@ object SubstringDup {
     * license boilerplate across millions of docs — is the same skew bomb
     * the LSH stage is hardened against); overflow counts surface in
     * `dropped` — no silent truncation. Same single-exchange Catalyst shape
-    * as `Lsh.candidatePairs`: three-long bucket rows into one bounded
-    * top-k aggregate (`gf.bounded_topk`) whose map-side partial pass ships
-    * at most `cap` members per bucket per input partition (no task-memory
-    * buffering — the round-1 `toBuffer` held whole buckets in memory,
-    * ADVICE r1 — and no full-table window sort), then higher-order pair
-    * expansion. `scopeCol` is folded into the bucket key for Same*-scope
-    * runs. */
+    * as `Lsh.candidatePairs`: three-long bucket rows (plus a constant
+    * `sim`) into the shared [[Lsh.cappedPairs]] step, whose bounded top-k
+    * aggregate ships at most `cap` members per bucket per input partition
+    * (no task-memory buffering — the round-1 `toBuffer` held whole buckets
+    * in memory, ADVICE r1 — and no full-table window sort). `scopeCol` is
+    * folded into the bucket key for Same*-scope runs. */
   def candidatePairs(
       spark: SparkSession,
       docs: DataFrame,
@@ -54,26 +53,12 @@ object SubstringDup {
       .select(
         col("id"), gf.nk_prefix64(col("nk")).as("nkp"), col("bscope_"),
         explode(gf.winnow_fingerprints(col("text"), cfg.anchorK, cfg.window)).as("fp"))
-      .select(xxhash64(col("fp"), col("bscope_")).as("bkey"), col("id"), col("nkp"))
+      .select(
+        xxhash64(col("fp"), col("bscope_")).as("bkey"), col("nkp"), col("id"),
+        lit(0L).as("sim"))
 
-    val cap = cfg.bucketCap
-    val grouped = fps
-      .groupBy(col("bkey"))
-      .agg(gf.bounded_topk(col("nkp"), col("id"), lit(0L), cap).as("r"))
-      .select(
-        col("bkey"), col("r.ms").as("ms"),
-        greatest(col("r.total") - cap, lit(0L)).as("dropped"))
-      .where(size(col("ms")) >= 2)
-    val pairs = grouped
-      .select(
-        explode(flatten(transform(col("ms"), (x, i) =>
-          transform(
-            slice(col("ms"), i + lit(2), size(col("ms"))),
-            y => struct(
-              x.getField("id").as("src_id"),
-              y.getField("id").as("dst_id")))))).as("p"),
-        col("dropped"))
-      .groupBy(col("p.src_id").as("src_id"), col("p.dst_id").as("dst_id"))
+    val pairs = Lsh.cappedPairs(fps, cfg.bucketCap)
+      .groupBy(col("src_id"), col("dst_id"))
       .agg(max(col("dropped")).as("dropped"))
 
     val m = ids.select(col("id"), col("url"))

@@ -27,6 +27,16 @@ class ConfigSpec extends AnyFunSuite {
     assert(base.hash != base.copy(sourcePriority = Seq("x.example")).hash)
   }
 
+  test("config hash ignores where the run lives and which CC path runs") {
+    val base = DedupConfig()
+    // a moved or copied run dir must still resume from its checkpoints
+    assert(base.hash == base.copy(runDir = Some("runs/a")).hash)
+    assert(base.copy(runDir = Some("runs/a")).hash ==
+      base.copy(runDir = Some("moved/a")).hash)
+    // both CC paths elect the same labels, so the threshold is not identity
+    assert(base.hash == base.copy(ccMaxDriverEdges = 0L).hash)
+  }
+
   test("unknown digest algo is rejected") {
     intercept[IllegalArgumentException] { DedupConfig(algo = "sha1") }
   }

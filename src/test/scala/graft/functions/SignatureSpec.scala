@@ -110,18 +110,6 @@ class SignatureSpec extends AnyFunSuite {
     assert(total > 10 && shared == total, s"$shared/$total")
   }
 
-  test("simhash blocks: hamming ≤ 3 pairs share a 16-bit block (pigeonhole)") {
-    val r = new scala.util.Random(13)
-    (0 until 200).foreach { _ =>
-      val h = r.nextLong()
-      var h2 = h
-      (0 until 3).foreach(_ => h2 ^= (1L << r.nextInt(64)))
-      val a = MinHashImpl.simhashBlocks(h)
-      val b = MinHashImpl.simhashBlocks(h2)
-      assert(a.zip(b).exists { case (x, y) => x == y })
-    }
-  }
-
   test("simhash permuted tables (Manku WWW'07): hamming ≤ 3 pairs share a " +
     "table key; key count is C(6,3); key space beats 16-bit blocks") {
     val r = new scala.util.Random(29)

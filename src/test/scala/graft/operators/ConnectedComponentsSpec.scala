@@ -25,9 +25,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     Array.tabulate(n)(find)
   }
 
-  private def runCase(n: Int, edges: Seq[(Int, Int)]): Unit = {
+  private def runCase(n: Int, edges: Seq[(Int, Int)]): Unit =
+    runCase(IndexedSeq.tabulate(n)(i => s"u$i"), edges)
+
+  private def runCase(urls: IndexedSeq[String], edges: Seq[(Int, Int)]): Unit = {
     import spark.implicits._
-    val urls = Array.tabulate(n)(i => s"u$i")
+    val n = urls.length
     val nodes = urls.toSeq.toDF("url")
       .withColumn("nk", graft.functions.gf.natural_sort_key(
         org.apache.spark.sql.functions.col("url")))
@@ -46,9 +49,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     byTruth.values.foreach { comp =>
       val labels = comp.map(i => got(urls(i))).toSet
       assert(labels.size == 1, s"component split: $comp -> $labels")
-      // representative = natural-sort-min member
+      // representative = natural-sort-min member, url breaking key ties
       val expectedRep = comp.map(urls).minBy(identity)(
-        Ordering.fromLessThan((a: String, b: String) => NaturalKey.compare(a, b) < 0))
+        Ordering.fromLessThan { (a: String, b: String) =>
+          val c = NaturalKey.compare(a, b)
+          c < 0 || (c == 0 && a < b)
+        })
       assert(labels.head == expectedRep, s"rep ${labels.head} != $expectedRep")
     }
     // no cross-component merging
@@ -72,6 +78,16 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("empty edges: every node its own cluster") {
     runCase(10, Seq.empty)
+  }
+
+  test("urls differing only in case: both paths break the key tie by url") {
+    // natural keys are case-insensitive, so these pairs tie on nk
+    runCase(
+      IndexedSeq(
+        "https://h.example/page.html", "https://h.example/Page.html",
+        "https://h.example/b/Item2", "https://h.example/b/item2",
+        "https://h.example/b/ITEM2"),
+      Seq((0, 1), (2, 3), (3, 4)))
   }
 
   test("star and clique") {

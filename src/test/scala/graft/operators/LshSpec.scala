@@ -114,25 +114,6 @@ class LshSpec extends AnyFunSuite {
       assert(!b.contains("sig#"), s"a Sort still carries the sig array:\n$b"))
   }
 
-  test("manku table path: pairs survive with SimHash tables on (lag-dedup branch)") {
-    val r = new scala.util.Random(21)
-    val base = randomDoc(r, 200)
-    val toks = base.split(' '); toks(9) = "edit"
-    val tcfg = cfg.copy(useSimhashTables = true)
-    val docs = docsFrame(Seq(("u1", base), ("u2", toks.mkString(" ")), ("u3", randomDoc(r, 200))))
-    val cands = Lsh.candidatePairs(spark, docs, tcfg)
-    val pair = cands
-      .where(col("src").isin("u1", "u2") && col("dst").isin("u1", "u2")).head()
-    // the near pair is found; its table keys add shared buckets on top of
-    // the minhash bands, so nshared under tables ≥ nshared without them
-    val bandsOnly = Lsh.candidatePairs(spark, docs, cfg)
-      .where(col("src").isin("u1", "u2") && col("dst").isin("u1", "u2")).head()
-    assert(pair.getAs[Long]("nshared") >= bandsOnly.getAs[Long]("nshared"))
-    val edges = Lsh.verifiedEdges(cands, docs, tcfg, tau = 0.8)
-      .select("src", "dst").collect().map(x => Set(x.getString(0), x.getString(1)))
-    assert(edges.toSet == Set(Set("u1", "u2")))
-  }
-
   test("candidate pairs carry free prefilter signals (ham, nshared)") {
     val r = new scala.util.Random(9)
     val base = randomDoc(r, 200)

@@ -212,4 +212,23 @@ class SpanDedupSpec extends AnyFunSuite {
       assert(d <= n && math.abs(f - d.toDouble / n) < 1e-12)
     }
   }
+
+  test("candidatePairs: a passage shared by cap + k docs yields capped pairs and counts drops") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, max}
+    val passage = ("all rights reserved to the example corporation " * 6).trim
+    val cap = 4; val k = 3
+    val df = (0 until cap + k).map(i => s"u$i" -> (prose(40 + i, 30) + " " + passage))
+      .toDF("url", "text")
+      .withColumn("nk", graft.functions.gf.natural_sort_key(col("url")))
+    val cands = SubstringDup.candidatePairs(
+      spark, df, SubstringDup.Config(minSubstr = 200, anchorK = 50, bucketCap = cap))
+    val pairs = cands.select("src", "dst").as[(String, String)].collect()
+    // every passage bucket keeps the same (nk, id)-first `cap` members, so
+    // the union is the C(cap, 2) clique over them, not C(cap + k, 2)
+    assert(pairs.length == cap * (cap - 1) / 2, pairs.toSeq)
+    assert(pairs.flatMap { case (a, b) => Seq(a, b) }.toSet.size == cap)
+    assert(cands.agg(max(col("dropped"))).head().getLong(0) == k,
+      "members beyond the cap must be counted")
+  }
 }

@@ -2,6 +2,8 @@ package graft.plans
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,5 +68,34 @@ class CheckpointSpec extends AnyFunSuite {
       == docsMtime, "stage ≤ k must not recompute")
     assert(Files.exists(Paths.get(dir, "labels._graft_manifest.json")),
       "stage > k must recommit")
+  }
+
+  test("a copied run dir resumes at its new path: no stage rebuilds") {
+    val src = freshDir()
+    val corpus = SyntheticCorpus.local(120)
+    val pages = spark.createDataFrame(corpus.pages)
+    val r1 = DedupPipeline.run(spark, pages, DedupConfig(runDir = Some(src)), fromHtml = true)
+    val d1 = r1.decisions.orderBy("url").collect().map(_.toString)
+
+    val dst = Paths.get(freshDir(), "moved")
+    val srcRoot = Paths.get(src)
+    val walk = Files.walk(srcRoot)
+    try walk.forEach(p => Files.copy(p, dst.resolve(srcRoot.relativize(p).toString)))
+    finally walk.close()
+    def manifests() = {
+      val ls = Files.list(dst)
+      try ls.iterator().asScala
+        .filter(_.getFileName.toString.endsWith("._graft_manifest.json"))
+        .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p)).toMap
+      finally ls.close()
+    }
+    val before = manifests()
+    assert(before.keySet.exists(_.startsWith("decisions.")), before.keySet)
+
+    val r2 = DedupPipeline.run(
+      spark, pages, DedupConfig(runDir = Some(dst.toString)), fromHtml = true)
+    val d2 = r2.decisions.orderBy("url").collect().map(_.toString)
+    assert(d1.sameElements(d2), "resumed output must be identical")
+    assert(manifests() == before, "a copied run dir must not rebuild any stage")
   }
 }

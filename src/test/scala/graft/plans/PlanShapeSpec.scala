@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Drift, Kmv, WebNormalize}
+import graft.functions.gf
+import graft.operators.{Drift, Kmv, SubstringDup, WebNormalize}
 
 /** Executed-plan assertions for the round-5 third-wave PLAN claims
   * (PLANS.md 36–38). Inputs round-trip through parquet first so
@@ -63,5 +64,15 @@ class PlanShapeSpec extends AnyFunSuite {
     val exchanges = "Exchange hashpartitioning\\([^)]*\\)".r.findAllIn(plan).toList
     assert(exchanges.nonEmpty && exchanges.forall(!_.contains("tok")),
       s"token stream must not shuffle:\n$exchanges")
+  }
+
+  test("PLAN: substring candidates cross exactly ONE bkey exchange (shared capped-pair step)") {
+    val docs = viaParquet(fixture).withColumn("nk", gf.natural_sort_key(col("url")))
+    val plan = finalPlan(
+      SubstringDup.candidatePairs(spark, docs, SubstringDup.Config(minSubstr = 20, anchorK = 8)))
+    // the exploded fingerprint table is partitioned by bkey once; the
+    // bounded top-k aggregate and the pair expansion reuse it
+    val bkeyExchanges = "hashpartitioning\\(bkey".r.findAllIn(plan).length
+    assert(bkeyExchanges == 1, s"expected 1 bkey exchange, got $bkeyExchanges:\n$plan")
   }
 }
