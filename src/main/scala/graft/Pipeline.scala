@@ -170,12 +170,7 @@ object DedupPipeline {
     // content digest per the configured algorithm (reference dial,
     // MainViewModel.cs:25-38); crc32 is zero-padded hex so the column is
     // uniformly a hex string whatever the dial says
-    val digest = cfg.algo match {
-      case "crc32" => lpad(lower(hex(crc32(col("text")))), 16, "0")
-      case "md5" => md5(col("text"))
-      case "sha256" => sha2(col("text"), 256)
-      case "sha512" => sha2(col("text"), 512)
-    }
+    val digest = IncrementalDedup.digestCol(col("text"), cfg.algo)
 
     // ---- extract + normalize (O1/O2/O3/O4 analogs) ----
     val docs = stage("docs") {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.gf
@@ -18,7 +18,9 @@ import graft.functions.gf
   * one bounded-top-k aggregate per bucket keeping members by (nk-prefix,
   * id) up to `bucketCap` (counting what was dropped — no silent
   * truncation) and a higher-order transform expanding the pairs. The
-  * substring and embedding-cosine stages share that bucket → pairs step.
+  * substring and embedding-cosine stages share that bucket → pairs step;
+  * the near and substring verifiers share the pairs → endpoint-payload
+  * step, [[attachEndpoints]].
   *
   * This is the scaled analog of the reference's per-device scheduling
   * discipline — bounded work per hot resource
@@ -74,7 +76,7 @@ object Lsh {
     * through the big explode-shuffle or the per-bucket aggregate:
     * at 1M docs the old string-carrying rows made task CPU inflate 2.7×
     * from 8→32 threads (allocation-rate bound, not compute bound). Ids
-    * resolve back to urls with two cheap joins on the (small) pair output.
+    * resolve back to urls through [[resolveUrls]].
     * An id collision (~N²/2^65) merely duplicates a candidate, which exact
     * verification discards.
     *
@@ -173,13 +175,7 @@ object Lsh {
         count(lit(1)).as("nshared"),
         max(col("dropped")).as("dropped"))
 
-    val m = ids.select(col("id"), col("url"))
-    pairs
-      .join(m.select(col("id").as("src_id"), col("url").as("src")), "src_id")
-      .join(m.select(col("id").as("dst_id"), col("url").as("dst")), "dst_id")
-      .select(
-        col("src"), col("dst"), col("same_sig"), col("ham"),
-        col("nshared"), col("dropped"))
+    resolveUrls(pairs, ids)
   }
 
   /** Bounded-bucket pair expansion — the one bucket → capped members →
@@ -218,6 +214,61 @@ object Lsh {
         col("dropped"))
       .select(col("p.src_id"), col("p.dst_id"), col("p.ham"), col("dropped"))
 
+  /** The one id → url resolve of the id-keyed candidate generators (this
+    * stage, `SubstringDup.candidatePairs`): two cheap joins of the (small)
+    * pair output against `ids` (id, url). Input: src_id, dst_id and any
+    * pair columns; output: src, dst, then those pair columns in order. */
+  def resolveUrls(pairs: DataFrame, ids: DataFrame): DataFrame = {
+    val carried = pairs.columns.filterNot(c => c == "src_id" || c == "dst_id").map(col)
+    pairs
+      .join(ids.select(col("id").as("src_id"), col("url").as("src")), "src_id")
+      .join(ids.select(col("id").as("dst_id"), col("url").as("dst")), "dst_id")
+      .select(col("src") +: col("dst") +: carried: _*)
+  }
+
+  /** Endpoint attach — the one pairs → endpoint-payload step of the
+    * verifiers (`verifiedEdges` here, `SubstringDup.verifiedEdges`,
+    * `dupSpans`, `dupSpansKeepOne`). Input: `pairs` with src, dst and the
+    * pair columns to carry; `docs` with url and whatever the payload
+    * expressions read. Output: src, dst, the carried columns, then
+    * `<name>_a` (src side) and `<name>_b` (dst side) per payload, in order.
+    *
+    * Semi-join reduction: `docs` is cut to the distinct touched urls
+    * before the payload expressions run, so each payload is evaluated once
+    * per touched doc, not once per corpus doc nor once per pair. Each pair
+    * then melts into two endpoint probes so ONE hash join attaches both
+    * sides from a single evaluation of the payload subtree; the round-3
+    * shape joined twice (once per side) and Spark planned the payload
+    * subtree twice — exchange reuse never fired across the two renamed
+    * sides, so the shingle pipeline (2.4 GB of set bytes at 2M docs) was
+    * paid double. The SHUFFLE_HASH hint keeps wide payload rows out of a
+    * sort-merge sort; the reassembly groupBy is keyed by the pair itself,
+    * so it is skew-free by construction — a hot doc in thousands of pairs
+    * spreads across partitions instead of landing on the join task that
+    * owns its url (the skew discipline of the reference's per-disk
+    * scheduler, `ViewModels/MainViewModel.cs:1166-1213`, applied to CPU).
+    * Carried columns reassemble with `first`: both probes carry equal
+    * values. */
+  def attachEndpoints(pairs: DataFrame, docs: DataFrame, payload: (String, Column)*): DataFrame = {
+    val touched = pairs.select(col("src").as("url"))
+      .unionByName(pairs.select(col("dst").as("url")))
+      .distinct()
+    val sides = docs.join(touched, Seq("url"), "left_semi")
+      .select(col("url") +: payload.map { case (n, e) => e.as(n) }: _*)
+    val carried = pairs.columns.filterNot(c => c == "src" || c == "dst")
+    val aggs = carried.map(c => first(col(c)).as(c)) ++ payload.flatMap { case (n, _) =>
+      Seq(
+        max(when(col("is_src"), col(n))).as(s"${n}_a"),
+        max(when(!col("is_src"), col(n))).as(s"${n}_b"))
+    }
+    pairs
+      .select(col("*"), explode(array(lit(true), lit(false))).as("is_src"))
+      .withColumn("url", when(col("is_src"), col("src")).otherwise(col("dst")))
+      .join(sides.hint("shuffle_hash"), Seq("url"))
+      .groupBy(col("src"), col("dst"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
   /** Verified near-dup edges: candidates are prefiltered on the signals the
     * buckets already produced for free (identical signature, SimHash
     * Hamming, shared-bucket count — for a true pair at J ≥ 0.8 the expected
@@ -225,9 +276,8 @@ object Lsh {
     * misses it with P < 1e-5), then confirmed with the exact shingle-set
     * Jaccard — the cheap→expensive cascade of the reference's predicate
     * chain (`ViewModels/MainViewModel.cs:996-1218`) as pipeline stages.
-    * Only candidate-touched docs are shingled (semi-join reduction, once
-    * per doc — see shingle_set), so the set side of the join is
-    * proportional to the candidate set, not the corpus. */
+    * Both shingle sets attach through [[attachEndpoints]], so the set side
+    * of the join is proportional to the candidate set, not the corpus. */
   def verifiedEdges(
       candidates: DataFrame, // src, dst, same_sig, ham, nshared
       docs: DataFrame, // url, text
@@ -236,40 +286,12 @@ object Lsh {
     val pre = candidates.where(
       col("same_sig") || col("ham") <= cfg.hamMax ||
         col("nshared") >= cfg.minSharedBands)
-    val touched = pre.select(col("src").as("url"))
-      .unionByName(pre.select(col("dst").as("url")))
-      .distinct()
-    // Shingle each touched doc ONCE into its distinct-sorted hash set; a doc
-    // appearing in p pairs was previously re-tokenized + re-hashed p times
-    // inside the per-pair kernel — the allocation burn that kept this stage
-    // flat from 8→32 threads. The per-pair kernel is now a sorted merge.
-    val sets = docs.select(col("url"), col("text"))
-      .join(touched, Seq("url"), "left_semi")
-      .select(col("url"), gf.shingle_set(col("text"), cfg.shingleK, cfg.seed).as("sset"))
-
-    // Expensive exact verification. Each pair melts into two endpoint
-    // probes so ONE hash join attaches both shingle sets from a single
-    // evaluation of the `sets` subtree; the round-3 shape joined `sets`
-    // twice (once per side) and Spark planned the shingle pipeline twice —
-    // exchange reuse never fired across the two renamed sides, so the
-    // dominant cost of this stage (tokenize+hash+sort per doc, 2.4 GB of
-    // set bytes at 2M docs) was paid double. The SHUFFLE_HASH hint keeps
-    // the wide set arrays out of a sort-merge sort; the reassembly groupBy
-    // is keyed by the pair itself, so it is skew-free by construction (the
-    // skew discipline of the reference's per-disk scheduler,
-    // ViewModels/MainViewModel.cs:1166-1213, applied to CPU).
-    val melted = pre
-      .select(col("src"), col("dst"), col("ham"), col("nshared"),
-        explode(array(lit(true), lit(false))).as("is_src"))
-      .withColumn("url", when(col("is_src"), col("src")).otherwise(col("dst")))
-    melted
-      .join(sets.hint("shuffle_hash"), Seq("url"))
-      .groupBy(col("src"), col("dst"))
-      .agg(
-        first(col("ham")).as("ham"),
-        first(col("nshared")).as("nshared"),
-        max(when(col("is_src"), col("sset"))).as("set_a"),
-        max(when(!col("is_src"), col("sset"))).as("set_b"))
+    // each touched doc is shingled ONCE into its distinct-sorted hash set
+    // (re-tokenizing per pair was the allocation burn that kept this stage
+    // flat from 8→32 threads); the per-pair kernel is a sorted merge
+    attachEndpoints(
+      pre.select(col("src"), col("dst"), col("ham"), col("nshared")), docs,
+      "set" -> gf.shingle_set(col("text"), cfg.shingleK, cfg.seed))
       .withColumn("jaccard", gf.merge_jaccard(col("set_a"), col("set_b")))
       .where(col("jaccard") >= tau)
       .select(col("src"), col("dst"), col("jaccard"), col("ham"), col("nshared"))

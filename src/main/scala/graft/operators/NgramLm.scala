@@ -56,15 +56,6 @@ object NgramLm {
         i => array_join(slice(ws, i, lit(n)), " ")))
   }
 
-  /** Count table for one order: (gram, cnt), hapax-pruned at `minCount`.
-    * One explode + one map-side-combined groupBy per order. */
-  def gramCounts(train: DataFrame, n: Int, textCol: String = "text",
-      minCount: Long = 0L): DataFrame =
-    train.select(explode(wordGrams(col(textCol), n)).as("gram"))
-      .groupBy(col("gram"))
-      .agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") >= minCount)
-
   /** The trained model: the order-tagged pruned count table (n, gram,
     * cnt) — the single join target [[score]] probes — plus the two corpus
     * scalars the unigram base needs (T tokens, V distinct words). The

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * Equality scopes (SameDir / SameHost) fold into the blocking key — a
   * composite groupBy instead of a pair predicate, so Catalyst plans one
   * shuffle and no post-filter. Inequality scopes (DifferentDir /
-  * DifferentHost) filter the candidate edge list.
+  * DifferentHost) cluster by similarity alone and dissolve clusters that
+  * never leave one scope value at decide time.
   */
 object Scope {
 
@@ -44,15 +45,6 @@ object Scope {
   def withScopeCols(docs: DataFrame): DataFrame = docs
     .withColumn("host", host(col("url")))
     .withColumn("dir", dir(col("url")))
-
-  /** Filter for candidate/verified pair frames carrying src & dst urls. */
-  def pairFilter(mode: Mode): Column = mode match {
-    case All => lit(true)
-    case SameDir => dir(col("src")) === dir(col("dst"))
-    case SameHost => host(col("src")) === host(col("dst"))
-    case DifferentDir => dir(col("src")) =!= dir(col("dst"))
-    case DifferentHost => host(col("src")) =!= host(col("dst"))
-  }
 
   /** Scoped singleton short-circuit (`MainViewModel.cs:616-688`): given a
     * blocking column, mark docs that cannot have a duplicate under the mode

@@ -61,11 +61,7 @@ object SubstringDup {
       .groupBy(col("src_id"), col("dst_id"))
       .agg(max(col("dropped")).as("dropped"))
 
-    val m = ids.select(col("id"), col("url"))
-    pairs
-      .join(m.select(col("id").as("src_id"), col("url").as("src")), "src_id")
-      .join(m.select(col("id").as("dst_id"), col("url").as("dst")), "dst_id")
-      .select(col("src"), col("dst"), col("dropped"))
+    Lsh.resolveUrls(pairs, ids)
   }
 
   /** Per-document merged duplicated spans — the Lee et al. 2022 behavior
@@ -93,15 +89,16 @@ object SubstringDup {
       docs: DataFrame,
       cfg: Config,
       scopeCol: org.apache.spark.sql.Column = lit("")): DataFrame = {
-    // the candidate frame feeds BOTH the touched-url semi-join and the
-    // pair melt; pin the narrow frame so the fingerprint bucketing runs
-    // once (the same three-consumer shape the pipeline's substr stage
-    // pins — AQE reuse alone recovers only part of the duplicate work:
-    // 1.47× wall / 1.74× shuffle bytes unpersisted, OPTIMIZATION_r06.md §6)
+    // the candidate frame feeds BOTH the endpoint attach's touched-url
+    // semi-join and its pair melt; pin the narrow frame so the fingerprint
+    // bucketing runs once (the same three-consumer shape the pipeline's
+    // substr stage pins — AQE reuse alone recovers only part of the
+    // duplicate work: 1.47× wall / 1.74× shuffle bytes unpersisted,
+    // OPTIMIZATION_r06.md §6)
     val candidates = candidatePairs(spark, docs, cfg, scopeCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val texts = touchedTexts(candidates, docs.select(col("url"), col("text")))
-    val paired = pairedTexts(candidates, texts)
+    val paired = Lsh.attachEndpoints(
+      candidates.select(col("src"), col("dst")), docs, "text" -> col("text"))
     // both directions from one kernel invocation pair; packed (s << 32) | e
     val perPair = paired.select(
       col("src"), col("dst"),
@@ -173,23 +170,14 @@ object SubstringDup {
       docs: DataFrame,
       cfg: Config,
       scopeCol: org.apache.spark.sql.Column = lit("")): DataFrame = {
-    // two consumers (touched-url semi-join + pair melt): pin the narrow
-    // candidate frame rather than re-running fingerprint bucketing
+    // two consumers (the endpoint attach's touched-url semi-join + pair
+    // melt): pin the narrow candidate frame rather than re-running
+    // fingerprint bucketing
     val candidates = candidatePairs(spark, docs, cfg, scopeCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val texts = touchedTexts(candidates, docs.select(col("url"), col("nk"), col("text")))
-    // the pairedTexts melt, widened with each side's natural key
-    val melted = candidates
-      .select(col("src"), col("dst"), explode(array(lit(true), lit(false))).as("is_src"))
-      .withColumn("url", when(col("is_src"), col("src")).otherwise(col("dst")))
-    val paired = melted
-      .join(texts.hint("shuffle_hash"), Seq("url"))
-      .groupBy(col("src"), col("dst"))
-      .agg(
-        max(when(col("is_src"), col("nk"))).as("nk_a"),
-        max(when(!col("is_src"), col("nk"))).as("nk_b"),
-        max(when(col("is_src"), col("text"))).as("text_a"),
-        max(when(!col("is_src"), col("text"))).as("text_b"))
+    val paired = Lsh.attachEndpoints(
+      candidates.select(col("src"), col("dst")), docs,
+      "nk" -> col("nk"), "text" -> col("text"))
     // orient: the (nk, url)-earlier side keeps, spans cut from the later
     val srcFirst =
       col("nk_a") < col("nk_b") ||
@@ -277,43 +265,11 @@ object SubstringDup {
 
   /** Exact verification: keep pairs with a real common substring ≥ L chars
     * (rolling-hash candidate positions confirmed by direct character
-    * comparison — zero false positives). Only texts of candidate-touched
-    * docs are shuffled (semi-join reduction), and the `texts` subtree is
-    * evaluated ONCE: each pair melts into two endpoint probes for a single
-    * hash join, reassembled by a pair-keyed (skew-free) groupBy — the
-    * two-join formulation planned the semi-join shuffle twice and moved
-    * both texts a third time through a rebalance. */
-  def verifiedEdges(candidates: DataFrame, docs: DataFrame, cfg: Config): DataFrame = {
-    val texts = touchedTexts(candidates, docs.select(col("url"), col("text")))
-    pairedTexts(candidates, texts)
+    * comparison — zero false positives). Both endpoint texts attach through
+    * [[Lsh.attachEndpoints]]: only candidate-touched texts are shuffled, and
+    * once each. */
+  def verifiedEdges(candidates: DataFrame, docs: DataFrame, cfg: Config): DataFrame =
+    Lsh.attachEndpoints(candidates.select(col("src"), col("dst")), docs, "text" -> col("text"))
       .where(gf.common_substring_ge(col("text_a"), col("text_b"), cfg.minSubstr))
       .select(col("src"), col("dst"))
-  }
-
-  /** docs rows of pair-touched urls (semi-join reduction). */
-  private def touchedTexts(candidates: DataFrame, docs: DataFrame): DataFrame = {
-    val touched = candidates.select(col("src").as("url"))
-      .unionByName(candidates.select(col("dst").as("url")))
-      .distinct()
-    docs.join(touched, Seq("url"), "left_semi")
-  }
-
-  /** (src, dst, text_a, text_b): both endpoint texts attached from ONE
-    * evaluation of `texts` — pairs melt into two (url, side) probes, one
-    * SHUFFLE_HASH join (no sort of wide text rows) attaches the text, and
-    * a groupBy on the pair itself reassembles the row. Pair keys are
-    * near-unique, so the reassembly exchange is skew-free — a hot doc in
-    * thousands of pairs spreads across partitions instead of landing on
-    * the join task that owns its url. */
-  private def pairedTexts(candidates: DataFrame, texts: DataFrame): DataFrame = {
-    val melted = candidates
-      .select(col("src"), col("dst"), explode(array(lit(true), lit(false))).as("is_src"))
-      .withColumn("url", when(col("is_src"), col("src")).otherwise(col("dst")))
-    melted
-      .join(texts.hint("shuffle_hash"), Seq("url"))
-      .groupBy(col("src"), col("dst"))
-      .agg(
-        max(when(col("is_src"), col("text"))).as("text_a"),
-        max(when(!col("is_src"), col("text"))).as("text_b"))
-  }
 }

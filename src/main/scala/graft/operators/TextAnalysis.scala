@@ -390,9 +390,6 @@ object TextAnalysis {
 
   // ---- fingerprinting -------------------------------------------------------
 
-  /** Cheap 64-bit content fingerprint (xxhash64 of the text). */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   /** Oracle-friendly content fingerprint: first 16 hex chars of md5 —
     * expressible identically in DuckDB for the correctness gate. */
   def fingerprintHex(text: Column): Column = substring(md5(text), 1, 16)

@@ -60,12 +60,6 @@ final class CheckpointIO(
     }
   }
 
-  /** True if `name` is already committed for this config. */
-  def isCommitted(name: String): Boolean = {
-    val manifest = Paths.get(runDir, s"$name._graft_manifest.json")
-    Files.exists(manifest) && manifestMatches(manifest)
-  }
-
   private def manifestMatches(manifest: Path): Boolean = {
     val body = new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
     body.contains(s""""config_hash":"$configHash"""")

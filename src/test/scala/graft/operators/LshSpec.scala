@@ -125,4 +125,27 @@ class LshSpec extends AnyFunSuite {
     assert(c.getAs[Long]("nshared") >= 2, s"nshared=${c.getAs[Long]("nshared")}")
     assert(c.getAs[Int]("ham") <= 10, s"ham=${c.getAs[Int]("ham")}")
   }
+
+  test("verified edges carry their candidate's ham and nshared through the endpoint reassembly") {
+    val r = new scala.util.Random(21)
+    val base = randomDoc(r, 300)
+    val variants = (0 until 12).map { i =>
+      val toks = base.split(' ')
+      (0 to i % 4).foreach(j => toks(10 * i + j) = s"v$i.$j") // 1–4 edits each
+      (f"u$i%02d", toks.mkString(" "))
+    }
+    val docs = docsFrame(variants)
+    val cands = Lsh.candidatePairs(spark, docs, cfg)
+    val edges = Lsh.verifiedEdges(cands, docs, cfg, tau = 0.8)
+    val joined = edges.as("e")
+      .join(cands.as("c"), col("e.src") === col("c.src") && col("e.dst") === col("c.dst"))
+      .select(col("e.ham"), col("c.ham"), col("e.nshared"), col("c.nshared"))
+      .collect()
+    assert(joined.length == edges.count() && joined.length > 10, s"edges=${joined.length}")
+    // distinct signal values, so a swapped or cross-pair reassembly shows
+    assert(joined.map(_.getLong(2)).distinct.length > 1)
+    joined.foreach { row =>
+      assert(row.getInt(0) == row.getInt(1) && row.getLong(2) == row.getLong(3), s"$row")
+    }
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.gf
-import graft.operators.{Drift, Kmv, SubstringDup, WebNormalize}
+import graft.operators.{Drift, Kmv, Lsh, SubstringDup, WebNormalize}
 
 /** Executed-plan assertions for the round-5 third-wave PLAN claims
   * (PLANS.md 36–38). Inputs round-trip through parquet first so
@@ -74,5 +74,24 @@ class PlanShapeSpec extends AnyFunSuite {
     // bounded top-k aggregate and the pair expansion reuse it
     val bkeyExchanges = "hashpartitioning\\(bkey".r.findAllIn(plan).length
     assert(bkeyExchanges == 1, s"expected 1 bkey exchange, got $bkeyExchanges:\n$plan")
+  }
+
+  test("PLAN: the near and substring verifiers reduce and attach endpoints from ONE evaluation") {
+    import spark.implicits._
+    val docs = viaParquet(fixture)
+    val urls = fixture.map(_._1)
+    val dir = java.nio.file.Files.createTempDirectory("plan_shape_pairs").toString
+    urls.zip(urls.tail).take(40).map { case (a, b) => (a, b, true, 0, 1L) }
+      .toDF("src", "dst", "same_sig", "ham", "nshared")
+      .write.mode("overwrite").parquet(dir)
+    val cands = spark.read.parquet(dir)
+    // the pair melt probes one payload subtree: one touched-url semi-join
+    // and one shingling pass, however many pairs each doc sits in
+    val near = finalPlan(Lsh.verifiedEdges(cands, docs, Lsh.Config(), tau = 0.0))
+    assert("shingle_set\\(".r.findAllIn(near).length == 1, s"shingle_set planned twice:\n$near")
+    assert("LeftSemi".r.findAllIn(near).length == 1, s"expected one LeftSemi:\n$near")
+    val sub = finalPlan(SubstringDup.verifiedEdges(
+      cands.select(col("src"), col("dst")), docs, SubstringDup.Config(minSubstr = 20, anchorK = 8)))
+    assert("LeftSemi".r.findAllIn(sub).length == 1, s"expected one LeftSemi:\n$sub")
   }
 }
